@@ -5,8 +5,8 @@ The reference runs ``python pyspark_etl.py <input> <output> [ts_col]``
 
     python -m loan_etl_data_pipeline_spark <input> <output> [ts_col]
 
-``input`` may be a file, a glob, or a directory (directories are
-expanded via discover_input_files — ALL matching csv/csv.gz files, not
+``input`` may be a file, a glob, or a directory (resolved by
+resolve_input_files: a directory expands to ALL its csv/csv.gz files, not
 just the first like the reference's discovery step,
 reference: airflow/dags/spark_etl_dag.py:60). The insights dict is
 printed as JSON and optionally written with --insights-json.
@@ -21,7 +21,7 @@ import sys
 
 from loan_etl_data_pipeline_spark.plans.etl import run_etl
 from loan_etl_data_pipeline_spark.session import create_session
-from loan_etl_data_pipeline_spark.sources.csv import discover_input_files
+from loan_etl_data_pipeline_spark.sources.csv import resolve_input_files
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -40,12 +40,10 @@ def main(argv: list[str] | None = None) -> int:
                    help="Spark master (default: $SPARK_MASTER or local[*])")
     args = p.parse_args(argv)
 
-    inputs: str | list[str] = args.input
-    if os.path.isdir(args.input):
-        inputs = discover_input_files(args.input)
-        if not inputs:
-            print(json.dumps({"status": "no_files"}))
-            return 1
+    inputs = resolve_input_files(args.input)
+    if not inputs:
+        print(json.dumps({"status": "no_files"}))
+        return 1
 
     from pyspark.sql import SparkSession
 

@@ -99,6 +99,10 @@ def _exclusive_offsets(
       two parts add via a broadcast join on the block id. Fan-out is
       O(nparts·√nparts), not O(nparts²), which is what "bounded at any
       data scale" actually requires at a 100k-core cluster.
+
+    Coverage differs: up to 256 partitions every pid 0..nparts-1 gets a
+    row; above 256, rows are guaranteed only for pids in blocks that
+    hold source rows (inner-join consumers on data-derived pids only).
     """
     # the exploded target id gets its own name; referencing the child's
     # ``__pid`` under an identically-named generator output worked only

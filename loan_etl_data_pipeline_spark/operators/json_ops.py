@@ -14,18 +14,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
-from pyspark.sql.types import StructType
 
 
 def json_field(col, path: str) -> Column:
     """Extract one field as string: ``json_field('props', '$.k')``."""
     c = F.col(col) if isinstance(col, str) else col
     return F.get_json_object(c, path)
-
-
-def parse_json_column(df: DataFrame, col: str, schema: StructType, out: str = "parsed") -> DataFrame:
-    """Parse a JSON string column once into a typed struct column."""
-    return df.withColumn(out, F.from_json(F.col(col), schema))
 
 
 def _k_stats(df: DataFrame, k, group_col: str) -> DataFrame:

@@ -78,25 +78,38 @@ def _mat(series: "pd.Series") -> np.ndarray:
     return np.stack([np.asarray(v, dtype=np.float64) for v in series])
 
 
-def _mat_rb(col: "pa.Array") -> np.ndarray:
-    """(n, d) float64 matrix from an Arrow list<float/double> column —
-    one offsets-aware flatten + reshape instead of the per-row
-    np.asarray loop of :func:`_mat` (opt r9). Values are identical:
-    float32→float64 widening is exact either way. Raises (reshape) on
-    ragged rows — embeddings are fixed-width by contract."""
+def _non_null(col: "pa.Array", what: str) -> "pa.Array":
+    """``col`` as one Arrow array; ValueError if any entry is null."""
     import pyarrow as pa
 
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
+    if col.null_count:
+        raise ValueError(f"{what} column has {col.null_count} null entries")
+    return col
+
+
+def _mat_rb(col: "pa.Array") -> np.ndarray:
+    """(n, d) float64 matrix from an Arrow list<float/double> column —
+    one offsets-aware flatten + reshape instead of the per-row
+    np.asarray loop of :func:`_mat` (opt r9). Values are identical:
+    float32→float64 widening is exact either way. Null or ragged rows
+    raise ValueError (flatten would drop a null row's values and
+    misalign the rest) — embeddings are fixed-width by contract; the
+    check reads only the null count and the offsets."""
+    col = _non_null(col, "embedding")
+    offsets = col.offsets.to_numpy(zero_copy_only=False)
+    widths = np.diff(offsets)
+    if len(widths) and (widths != widths[0]).any():
+        raise ValueError(
+            f"ragged embedding column: row widths {widths.min()}..{widths.max()}"
+        )
     flat = col.flatten().to_numpy(zero_copy_only=False)
     return flat.astype(np.float64, copy=False).reshape(len(col), -1)
 
 
 def _ids_rb(col: "pa.Array") -> np.ndarray:
-    import pyarrow as pa
-
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
+    col = _non_null(col, "id")
     return col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
 
 
@@ -403,58 +416,6 @@ def _band_signatures(
     return (bits << np.arange(planes_per_band, dtype=np.int64)[None, None, :]).sum(axis=2)
 
 
-def lsh_signatures(
-    df: DataFrame,
-    *,
-    dim: int,
-    bands: int = 16,
-    planes_per_band: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane banded LSH signatures: (id, sigs array<bigint>)."""
-    from pyspark.sql.types import ArrayType
-
-    ensure_worker_imports(df.sparkSession)
-    planes = _plane_matrix(dim, bands * planes_per_band)
-    sc = df.sparkSession.sparkContext
-    bp = sc.broadcast(planes)
-    schema = StructType(
-        [StructField("id", LongType()), StructField("sigs", ArrayType(LongType()))]
-    )
-
-    def _scan(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            n = rb.num_rows
-            sigs = _band_signatures(
-                _mat_rb(rb.column(rb.schema.get_field_index(vec_col))),
-                bp.value,
-                bands,
-                planes_per_band,
-            )
-            sig_list = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(0, (n + 1) * bands, bands, dtype=np.int32)
-                ),
-                pa.array(np.ascontiguousarray(sigs).ravel()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        _ids_rb(rb.column(rb.schema.get_field_index(id_col)))
-                    ),
-                    sig_list,
-                ],
-                names=["id", "sigs"],
-            )
-
-    return df.select(id_col, vec_col).mapInArrow(_scan, schema=schema)
-
-
 def lsh_topk(
     queries_df: DataFrame,
     corpus_df: DataFrame,
@@ -601,12 +562,14 @@ def cosine_neardup_lsh(
             )
             # replicate each vector to its `bands` buckets, cast to the
             # declared list<float> exactly as the old pandas→Arrow
-            # serializer did (same IEEE narrowing)
+            # serializer did (same IEEE narrowing; unsafe cast, so an
+            # array<double> input narrows instead of being range-checked)
             vec_rep = pc.cast(
                 vec_raw.take(
                     pa.array(np.repeat(np.arange(n, dtype=np.int64), bands))
                 ),
                 pa.list_(pa.float32()),
+                safe=False,
             )
             yield pa.RecordBatch.from_arrays(
                 [

@@ -15,6 +15,8 @@ Differences, all scale-motivated (SURVEY.md §4.3):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark import StorageLevel
 
@@ -27,12 +29,59 @@ from loan_etl_data_pipeline_spark.operators.profile import (
     generate_insights,
     write_insights_json,
 )
-from loan_etl_data_pipeline_spark.sources.csv import read_csv
+from loan_etl_data_pipeline_spark.sources.csv import (
+    read_csv,
+    resolve_input_files,
+    sniff_csv_dialect,
+)
 
 
 def clean(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
     """The transformation core: mode-fill all columns, then split ``ts_col``."""
     return split_timestamp(fill_nulls_with_mode(df), ts_col)
+
+
+def _run(
+    spark: SparkSession,
+    input_path: str | list[str],
+    ts_col: str,
+    write,
+    *,
+    schema=None,
+    insights_path: str | None = None,
+    sniff_dialect: bool = False,
+) -> dict:
+    """Read → clean → ``write(cleaned.write)`` → insights (→ JSON report)."""
+    files = resolve_input_files(input_path)
+    dialect: dict = {}
+    if sniff_dialect:
+        # the sniffer needs one real file; skip empty ones, which would
+        # sniff as the default comma dialect — the exact miss this flag
+        # exists to prevent
+        local = [p for p in files if os.path.isfile(p) and os.path.getsize(p) > 0]
+        if not local:
+            raise ValueError(
+                f"sniff_dialect=True but no readable file resolves from "
+                f"{input_path!r}"
+            )
+        d = sniff_csv_dialect(local[0])
+        dialect = {"sep": d["sep"], "quote": d["quote"], "header": d["header"]}
+    cleaned = clean(read_csv(spark, files, schema=schema, **dialect), ts_col)
+
+    # One materialization, two consumers (write + insights). MEMORY_AND_DISK
+    # so a 100 TB run degrades to disk instead of OOM; on a real cluster
+    # you'd often skip the cache and let the parquet write feed insights
+    # by re-reading the written output — both paths avoid re-scanning CSV.
+    cleaned.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        write(cleaned.write)
+        insights = generate_insights(cleaned)
+    finally:
+        cleaned.unpersist()
+
+    if insights_path:
+        write_insights_json(insights, insights_path)
+    return insights
 
 
 def run_etl(
@@ -48,62 +97,21 @@ def run_etl(
 ) -> dict:
     """Run the full reference-parity pipeline; returns the insights dict.
 
-    ``input_path`` may be a file, glob, or list (the reference processed
-    only the first discovered file — reference:
-    airflow/dags/spark_etl_dag.py:60 — we take everything).
+    ``input_path`` may be a file, glob, directory, or list of those,
+    resolved by ``sources.csv.resolve_input_files`` (a directory reads
+    every ``CSV_EXTENSIONS`` file, so a landing dir reads only its
+    published files; the reference processed only the first discovered
+    file — reference: airflow/dags/spark_etl_dag.py:60).
     ``sniff_dialect=True`` detects sep/quote/header from the head of the
     first input file (sources/csv.sniff_csv_dialect — metadata-scale
     driver work) instead of assuming the reference's comma+header, so a
     semicolon locale export parses into real columns.
     """
-    dialect: dict = {}
-    if sniff_dialect:
-        import glob as _glob
-        import os as _os
-
-        from loan_etl_data_pipeline_spark.sources.csv import sniff_csv_dialect
-
-        # input_path may be a file, glob, directory, or list of those —
-        # the sniffer needs one REAL file, so resolve the first one
-        first = input_path[0] if isinstance(input_path, list) else input_path
-        def _sniffable(p: str) -> bool:
-            # skip empty files: a Spark-written dir sorts its 0-byte
-            # _SUCCESS marker first, which would sniff as the default
-            # comma dialect — the exact miss this flag exists to prevent
-            return _os.path.isfile(p) and _os.path.getsize(p) > 0
-
-        if _os.path.isdir(first):
-            candidates = sorted(
-                p for p in _glob.glob(_os.path.join(first, "*")) if _sniffable(p)
-            )
-        elif _os.path.isfile(first):
-            candidates = [first] if _sniffable(first) else []
-        else:
-            candidates = sorted(p for p in _glob.glob(first) if _sniffable(p))
-        if not candidates:
-            raise ValueError(
-                f"sniff_dialect=True but no readable file resolves from "
-                f"{first!r}"
-            )
-        d = sniff_csv_dialect(candidates[0])
-        dialect = {"sep": d["sep"], "quote": d["quote"], "header": d["header"]}
-    raw = read_csv(spark, input_path, schema=schema, **dialect)
-    cleaned = clean(raw, ts_col)
-
-    # One materialization, two consumers (write + insights). MEMORY_AND_DISK
-    # so a 100 TB run degrades to disk instead of OOM; on a real cluster
-    # you'd often skip the cache and let the parquet write feed insights
-    # by re-reading the written output — both paths avoid re-scanning CSV.
-    cleaned.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        cleaned.write.mode(write_mode).parquet(output_path)
-        insights = generate_insights(cleaned)
-    finally:
-        cleaned.unpersist()
-
-    if insights_path:
-        write_insights_json(insights, insights_path)
-    return insights
+    return _run(
+        spark, input_path, ts_col,
+        lambda w: w.mode(write_mode).parquet(output_path),
+        schema=schema, insights_path=insights_path, sniff_dialect=sniff_dialect,
+    )
 
 
 def run_etl_incremental(
@@ -130,28 +138,20 @@ def run_etl_incremental(
     other. At 100 TB, date partitioning is also what makes downstream
     time-filtered scans prune to the touched days.
     """
-    raw = read_csv(spark, input_path, schema=schema)
-    cleaned = clean(raw, ts_col)
-
     mode_key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(mode_key, None)
     spark.conf.set(mode_key, "dynamic")
-    cleaned.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        cleaned.write.mode("overwrite").partitionBy(partition_col).parquet(
-            output_path
+        return _run(
+            spark, input_path, ts_col,
+            lambda w: w.mode("overwrite").partitionBy(partition_col).parquet(output_path),
+            schema=schema, insights_path=insights_path,
         )
-        insights = generate_insights(cleaned)
     finally:
-        cleaned.unpersist()
         if prev is None:
             spark.conf.unset(mode_key)
         else:
             spark.conf.set(mode_key, prev)
-
-    if insights_path:
-        write_insights_json(insights, insights_path)
-    return insights
 
 
 __all__ = ["run_etl", "run_etl_incremental", "clean", "TS_FORMATS"]

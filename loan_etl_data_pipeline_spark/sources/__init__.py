@@ -1,4 +1,4 @@
-from loan_etl_data_pipeline_spark.sources.csv import read_csv, discover_input_files, write_csv
+from loan_etl_data_pipeline_spark.sources.csv import read_csv, discover_input_files, resolve_input_files, write_csv
 from loan_etl_data_pipeline_spark.sources.tables import load_table, TABLES
 from loan_etl_data_pipeline_spark.sources.bucketed import write_bucketed, read_bucketed
 from loan_etl_data_pipeline_spark.sources.layout import (
@@ -17,7 +17,7 @@ from loan_etl_data_pipeline_spark.sources.excel import excel_to_csv
 from loan_etl_data_pipeline_spark.sources.jsonl import read_jsonl, write_jsonl
 
 __all__ = [
-    "read_csv", "write_csv", "discover_input_files", "load_table", "TABLES",
+    "read_csv", "write_csv", "discover_input_files", "resolve_input_files", "load_table", "TABLES",
     "write_bucketed", "read_bucketed", "write_sorted", "write_zordered",
     "zorder_key", "compact_files",
     "GoogleDriveClient", "LocalDirClient", "land_new_files", "list_all_files",

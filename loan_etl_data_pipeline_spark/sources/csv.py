@@ -13,6 +13,8 @@ silently processes only the FIRST matching file in the landing directory
   (fixing the first-file-only bug) while keeping the same filtering
   semantics: keep ``*.csv`` / ``*.csv.gz``, ignore dotfiles and JSON
   sidecars (reference: airflow/dags/spark_etl_dag.py:44-60).
+  ``CSV_EXTENSIONS`` is the one definition of a data file, and
+  ``resolve_input_files`` the one resolver every batch reader uses.
 
 Gzip needs no special casing: Spark's CSV reader auto-detects the
 ``.gz`` codec, same as the reference relies on.
@@ -20,6 +22,7 @@ Gzip needs no special casing: Spark's CSV reader auto-detects the
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,10 +31,8 @@ from pyspark.sql.types import StructType
 CSV_EXTENSIONS = (".csv", ".csv.gz")
 
 
-def discover_input_files(
-    directory: str, extensions: tuple[str, ...] = CSV_EXTENSIONS
-) -> list[str]:
-    """All non-hidden files in ``directory`` with a matching extension, sorted.
+def discover_input_files(directory: str) -> list[str]:
+    """All non-hidden files in ``directory`` with a ``CSV_EXTENSIONS`` name, sorted.
 
     Sorted for determinism; returns [] when the directory is missing or
     empty (the reference early-returns "no_files",
@@ -39,12 +40,23 @@ def discover_input_files(
     """
     if not os.path.isdir(directory):
         return []
-    out = []
-    for fn in sorted(os.listdir(directory)):
-        if fn.startswith("."):
-            continue
-        if fn.lower().endswith(tuple(e.lower() for e in extensions)):
-            out.append(os.path.join(directory, fn))
+    return [
+        os.path.join(directory, fn)
+        for fn in sorted(os.listdir(directory))
+        if not fn.startswith(".") and fn.lower().endswith(CSV_EXTENSIONS)
+    ]
+
+
+def resolve_input_files(paths: str | list[str]) -> list[str]:
+    """The files a batch read of ``paths`` (a file, glob, directory, or a
+    list of those) takes, in order: a local glob expands to its matches
+    and a directory to :func:`discover_input_files`; a path that matches
+    nothing locally (a remote URI, a missing file) passes through for
+    Spark to resolve or reject."""
+    out: list[str] = []
+    for pattern in [paths] if isinstance(paths, str) else paths:
+        for p in sorted(glob.glob(pattern)) or [pattern]:
+            out.extend(discover_input_files(p) if os.path.isdir(p) else [p])
     return out
 
 

@@ -22,10 +22,18 @@ Two reference bugs are fixed, not replicated:
   task) — a file whose download then fails is never retried.
   ``land_new_files`` records a file as seen only after it lands.
 
-Downstream contract: the landing dir this fills is exactly what the
-batch ETL (plans/etl.py) and the streaming file source
-(streaming/ingest.py) consume; Structured Streaming's checkpointed file
-log replaces the seen-set once files are local.
+Published-file rule: each landed remote file publishes exactly ONE
+visible data file, its gzip copy ``<name>.gz`` (or the file itself when
+its name already ends in ``.gz``), written under a hidden temporary
+name and moved into place with ``os.replace`` so no reader ever sees a
+partial file. The raw download stays hidden at ``local_path``
+(``.<name>``), as does the seen-state; Spark's file index,
+``sources.csv.discover_input_files`` and :class:`LocalDirClient` all
+skip ``.``-prefixed names, and ``CSV_EXTENSIONS`` excludes the
+``latest_meta.json`` sidecar. So the batch ETL (plans/etl.py) and the
+streaming file source (streaming/ingest.py) read every landed row once;
+Structured Streaming's checkpointed file log replaces the seen-set once
+files are local.
 """
 
 from __future__ import annotations
@@ -89,17 +97,19 @@ def land_new_files(
     landing_dir: str,
     *,
     state_path: str | None = None,
-    compress: bool = True,
 ) -> list[dict]:
-    """Poll once: download every not-yet-seen file into ``landing_dir``.
+    """Poll once: land every not-yet-seen file into ``landing_dir``.
 
     Returns the metadata records (the reference's ``latest_meta.json``
     shape: file_id, name, mimeType, local_path, compressed_path,
     original_size, compressed_size, rows) and writes them as the
-    ``latest_meta.json`` sidecar. Seen-state lives in a JSON file
+    ``latest_meta.json`` sidecar. ``local_path`` is the raw download
+    and ``compressed_path`` the published gzip copy (None when the
+    remote file was already ``.gz``: then it is published as is, at
+    ``local_path``). Seen-state lives in a JSON file
     (default ``<landing_dir>/.landing_seen.json`` — the engine-side
     replacement for the Airflow Variable) and is committed only after
-    each file has fully landed, so failures retry on the next poll.
+    each file has been published, so failures retry on the next poll.
     """
     os.makedirs(landing_dir, exist_ok=True)
     state_path = state_path or os.path.join(landing_dir, ".landing_seen.json")
@@ -115,13 +125,19 @@ def land_new_files(
         safe_name = os.path.basename(f["name"].replace("\\", "/"))
         if not safe_name or safe_name in (".", ".."):
             continue
-        local_path = os.path.join(landing_dir, safe_name)
-        client.fetch(f["id"], local_path)
-        compressed_path = None
-        if compress and not f["name"].endswith(".gz"):
-            compressed_path = local_path + ".gz"
-            with open(local_path, "rb") as src, gzip.open(compressed_path, "wb") as gz:
+        published = safe_name if safe_name.endswith(".gz") else safe_name + ".gz"
+        publish_path = os.path.join(landing_dir, published)
+        tmp_path = os.path.join(landing_dir, f".{published}.tmp")
+        if published == safe_name:
+            client.fetch(f["id"], tmp_path)
+            local_path, compressed_path = publish_path, None
+        else:
+            local_path = os.path.join(landing_dir, "." + safe_name)
+            client.fetch(f["id"], local_path)
+            with open(local_path, "rb") as src, gzip.open(tmp_path, "wb") as gz:
                 shutil.copyfileobj(src, gz)
+            compressed_path = publish_path
+        os.replace(tmp_path, publish_path)
         metas.append(
             {
                 "file_id": f["id"],

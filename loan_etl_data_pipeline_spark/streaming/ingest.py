@@ -32,6 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import LongType, StructField, StructType
 
 from loan_etl_data_pipeline_spark.plans.etl import clean
+from loan_etl_data_pipeline_spark.sources.csv import CSV_EXTENSIONS
 
 
 def stream_etl(
@@ -49,9 +50,10 @@ def stream_etl(
 ) -> StreamingQuery:
     """Continuous reference-parity ETL over a landing directory.
 
-    Each discovered CSV/CSV.GZ is read exactly once (checkpointed file
-    log), cleaned with the batch `clean` pipeline inside ``foreachBatch``,
-    and appended as Parquet. ``on_batch(cleaned_df, batch_id)`` is the
+    Each ``CSV_EXTENSIONS`` file (the data files the batch readers take;
+    in a landing dir, its published ``.csv.gz`` copies) is read exactly
+    once (checkpointed file log), cleaned with the batch `clean` pipeline
+    inside ``foreachBatch``, and appended as Parquet. ``on_batch(cleaned_df, batch_id)`` is the
     notification hook standing in for the reference's email step
     (reference: airflow/dags/drive_watch_dag.py:214-288) — out-of-engine
     side effects stay callbacks, exactly as SURVEY.md §7 M5 prescribes.
@@ -63,7 +65,7 @@ def stream_etl(
     reader = (
         spark.readStream.schema(schema)
         .option("header", "true")
-        .option("pathGlobFilter", "*.csv*")
+        .option("pathGlobFilter", "*{" + ",".join(CSV_EXTENSIONS) + "}")
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

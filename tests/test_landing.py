@@ -1,8 +1,8 @@
 """Landing connector (sources/landing.py): poll/dedup/compress/sidecar
-logic, pagination fix, and the Drive adapter against a fake service.
-
-End of the chain is covered by tests/test_etl.py (run_etl over a landed
-directory); here we prove the landing step itself.
+logic, pagination fix, the Drive adapter against a fake service, the
+published-file rule (a partial download is never visible), and the whole
+loan chain: two landings into one directory read by run_etl,
+run_etl_incremental and a restarted stream_etl.
 """
 
 from __future__ import annotations
@@ -11,6 +11,9 @@ import gzip
 import json
 import os
 
+import pytest
+
+from loan_etl_data_pipeline_spark.sources.csv import discover_input_files
 from loan_etl_data_pipeline_spark.sources.landing import (
     GoogleDriveClient,
     LocalDirClient,
@@ -124,3 +127,88 @@ def test_google_drive_client_with_fake_service(tmp_path):
     metas = land_new_files(client, str(tmp_path / "dst"))
     assert sorted(m["file_id"] for m in metas) == ["id1", "id2"]  # both pages
     assert all(m["rows"] == 1 for m in metas)
+
+
+@pytest.mark.parametrize("name", ["a.csv", "a.csv.gz"])
+def test_partial_fetch_is_never_visible(spark, tmp_path, name):
+    """A fetch that writes half a file and then fails leaves nothing a
+    reader can see; the next poll lands the file."""
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    src.mkdir()
+    text = b"loan_id\n1\n2\n"
+    (src / name).write_bytes(gzip.compress(text) if name.endswith(".gz") else text)
+
+    class HalfThenFail(LocalDirClient):
+        failed = False
+
+        def fetch(self, file_id, dest_path):
+            if not self.failed:
+                self.failed = True
+                data = (src / name).read_bytes()
+                with open(dest_path, "wb") as f:
+                    f.write(data[: len(data) // 2])
+                raise OSError("connection reset")
+            return super().fetch(file_id, dest_path)
+
+    client = HalfThenFail(str(src))
+    with pytest.raises(OSError):
+        land_new_files(client, str(dst))
+    assert discover_input_files(str(dst)) == []
+    assert spark.read.schema("loan_id long").csv(str(dst)).count() == 0
+
+    assert [m["name"] for m in land_new_files(client, str(dst))] == [name]
+    (published,) = discover_input_files(str(dst))
+    assert os.path.basename(published) == "a.csv.gz"
+    with gzip.open(published, "rb") as f:
+        assert f.read() == text
+
+
+_LOAN_SCHEMA = "loan_id long, timestamp string, loan_amount double, loan_type string"
+
+
+def _day_csv(first_id: int, day: int) -> str:
+    rows = [
+        f"{first_id + i},2024-03-{day:02d} 0{i}:00:00,{100.0 * (i + 1)},"
+        + ("auto" if i % 2 else "")
+        for i in range(5)
+    ]
+    return "loan_id,timestamp,loan_amount,loan_type\n" + "\n".join(rows) + "\n"
+
+
+def test_landed_chain_reads_each_row_once(spark, tmp_path):
+    """Two landings into one directory, then the batch, incremental and
+    streaming readers over that directory: every landed row is read
+    exactly once (no raw copy, gzip copy or sidecar read twice)."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from loan_etl_data_pipeline_spark.plans.etl import run_etl, run_etl_incremental
+    from loan_etl_data_pipeline_spark.streaming.ingest import stream_etl
+
+    schema = _parse_datatype_string(_LOAN_SCHEMA)
+    src, landing = tmp_path / "src", str(tmp_path / "landing")
+    src.mkdir()
+    client = LocalDirClient(str(src))
+
+    def stream():
+        q = stream_etl(spark, landing, str(tmp_path / "stream"),
+                       str(tmp_path / "ckpt"), schema=schema, available_now=True)
+        q.awaitTermination(120)
+        assert not q.isActive
+        return spark.read.parquet(str(tmp_path / "stream"))
+
+    def rows_and_ids(df):
+        return df.count(), df.select("loan_id").distinct().count()
+
+    _write(src / "day1.csv", _day_csv(1, 1))
+    assert len(land_new_files(client, landing)) == 1
+    assert rows_and_ids(stream()) == (5, 5)
+
+    _write(src / "day2.csv", _day_csv(6, 2))
+    assert [m["name"] for m in land_new_files(client, landing)] == ["day2.csv"]
+    assert rows_and_ids(stream()) == (10, 10)
+
+    batch, inc = str(tmp_path / "batch"), str(tmp_path / "inc")
+    assert run_etl(spark, landing, batch)["total_loans"] == 10
+    assert rows_and_ids(spark.read.parquet(batch)) == (10, 10)
+    assert run_etl_incremental(spark, landing, inc, schema=schema)["total_loans"] == 10
+    assert rows_and_ids(spark.read.parquet(inc)) == (10, 10)

@@ -339,3 +339,46 @@ def test_threshold_scan_empty_when_bar_too_high(spark, sf_dir):
     )
     assert out.count() == 0
     assert out.columns == ["query_id", "corpus_id", "cosine"]
+
+
+def test_embedding_batches_reject_null_and_ragged_rows():
+    """_mat_rb/_ids_rb flatten whole Arrow batches: a null or ragged row
+    must raise, not silently shift every later vector onto the wrong id
+    (flatten drops a null row's values; reshape(n, -1) then still fits
+    when the remaining value count divides by n)."""
+    import pyarrow as pa
+
+    from loan_etl_data_pipeline_spark.operators.similarity import _ids_rb, _mat_rb
+
+    vecs = pa.array([[1.0, 2.0], [3.0, 4.0]], pa.list_(pa.float32()))
+    assert _mat_rb(vecs).tolist() == [[1.0, 2.0], [3.0, 4.0]]
+    with pytest.raises(ValueError, match="null"):
+        _mat_rb(pa.array([[1.0, 2.0], None], pa.list_(pa.float32())))
+    with pytest.raises(ValueError, match="ragged"):
+        _mat_rb(pa.array([[1.0, 2.0, 3.0], [4.0]], pa.list_(pa.float32())))
+    with pytest.raises(ValueError, match="null"):
+        _ids_rb(pa.chunked_array([pa.array([1, None], pa.int64())]))
+
+
+def test_neardup_lsh_narrows_double_embeddings(spark):
+    """array<double> embeddings narrow to the kernel's list<float> like
+    the old pandas serializer did: the result equals the run on the
+    same vectors cast to array<float> first, including coordinates
+    float32 cannot represent (0.1, an underflowing 1e-50)."""
+    rng = np.random.default_rng(11)
+    dim = 16
+    base = rng.normal(size=(60, dim))
+    base[0, :] = 0.1
+    base[1, 0] = 1e-50
+    rows = [(i, base[i].tolist()) for i in range(60)]
+    rows += [(1000 + i, (base[i] * 1.001 + 1e-3).tolist()) for i in range(10)]
+    dbl = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    flt = dbl.withColumn("embedding", F.col("embedding").cast("array<float>"))
+
+    def pairs(df):
+        out = cosine_neardup_lsh(df, threshold=0.9, dim=dim, planes_per_band=6)
+        return sorted(tuple(r) for r in out.collect())
+
+    got = pairs(dbl)
+    assert {(i, 1000 + i) for i in range(10)} <= {(a, b) for a, b, _ in got}
+    assert got == pairs(flt)
