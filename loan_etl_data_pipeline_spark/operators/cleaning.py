@@ -126,6 +126,46 @@ def column_modes(df: DataFrame, cols: list[str] | None = None) -> dict[str, str 
     cols = list(cols) if cols is not None else list(df.columns)
     if not cols:
         return {}
+    top = _ranked_counts(df, cols).filter(F.col("__rn") == 1)
+    return {r["col_name"]: r["value"] for r in top.select("col_name", "value").collect()}
+
+
+def column_modes_with_counts(
+    df: DataFrame, count_col: str
+) -> tuple[dict[str, str | None], list[tuple]]:
+    """:func:`column_modes` of every column plus ``count_col``'s value
+    counts, in the SAME job.
+
+    The melt histogram already holds every ``(value, count)`` of every
+    column; this collects ``count_col``'s rows next to the per-column
+    top-1 rows. Returns ``(modes, counts)``: ``modes`` exactly as
+    :func:`column_modes` returns it, ``counts`` as ``(value, count)``
+    pairs in mode order (``counts[0]`` is the mode), each value cast back
+    to the column's type by the cast :func:`fill_nulls_with_mode` applies
+    to a mode (null stays None); empty when ``count_col`` is not a column.
+    """
+    is_counted = F.col("col_name") == count_col
+    dtype = dict(df.dtypes).get(count_col, "string")
+    typed = F.when(is_counted, F.col("value").cast(dtype))
+    rows = (
+        _ranked_counts(df, df.columns)
+        .filter((F.col("__rn") == 1) | is_counted)
+        .select("col_name", "value", "cnt", "__rn", typed.alias("typed"))
+        .collect()
+    )
+    modes = {r["col_name"]: r["value"] for r in rows if r["__rn"] == 1}
+    counts = [
+        (r["typed"], r["cnt"])
+        for r in sorted(rows, key=lambda r: r["__rn"])
+        if r["col_name"] == count_col
+    ]
+    return modes, counts
+
+
+def _ranked_counts(df: DataFrame, cols: list[str]) -> DataFrame:
+    """The melt histogram ``(col_name, value, cnt)`` of ``cols``, each
+    column's rows numbered ``__rn`` in mode order (count DESC, value ASC,
+    nulls first)."""
     pairs = F.array(
         *[
             F.struct(
@@ -138,8 +178,7 @@ def column_modes(df: DataFrame, cols: list[str] | None = None) -> dict[str, str 
     melted = df.select(F.explode(pairs).alias("kv")).select("kv.col_name", "kv.value")
     counts = melted.groupBy("col_name", "value").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("col_name").orderBy(F.desc("cnt"), F.asc_nulls_first("value"))
-    top = counts.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-    return {r["col_name"]: r["value"] for r in top.select("col_name", "value").collect()}
+    return counts.withColumn("__rn", F.row_number().over(w))
 
 
 def column_modes_per_column(df: DataFrame, cols: list[str] | None = None) -> dict:

@@ -11,10 +11,14 @@ reference: etl/insights/insights.json:1-3).
 
 Scale difference vs the reference: the reference fires three separate
 uncached jobs (count, mean+collect, groupBy+toPandas —
-reference: airflow/dags/etl/pyspark_etl.py:38,41,44). Here the scalar
-aggregates are ONE job (single ``agg`` over the frame), the group-by is
-a second, and callers are expected to pass an already-cached frame (see
-plans/etl.py) so nothing re-reads the source.
+reference: airflow/dags/etl/pyspark_etl.py:38,41,44). Here
+:func:`generate_insights` runs the scalar aggregates as ONE job (single
+``agg`` over the frame) and the group-by as a second; each re-executes
+the frame's lineage, so pass a cached frame if it is expensive. The ETL
+plan (plans/etl.py) fires NO insights job at all: it takes the same
+scalar aggregates (:func:`insights_aggregates`) from an ``Observation``
+on its Parquet write and the type counts from its mode job, and builds
+the dict with the same :func:`assemble_insights`.
 """
 
 from __future__ import annotations
@@ -26,28 +30,57 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 
+#: Default columns the insights read (reference: airflow/dags/etl/pyspark_etl.py:40,43).
+AMOUNT_COL = "loan_amount"
+TYPE_COL = "loan_type"
+
+
+def insights_aggregates(columns: list[str], amount_col: str = AMOUNT_COL) -> dict:
+    """The scalar insights aggregates over a frame with ``columns``:
+    ``total`` always, ``avg_amount`` only when ``amount_col`` exists."""
+    aggs = {"total": F.count(F.lit(1))}
+    if amount_col in columns:
+        aggs["avg_amount"] = F.avg(F.col(amount_col))
+    return aggs
+
+
+def assemble_insights(
+    columns: list[str],
+    scalars: dict,
+    type_counts: list[tuple],
+    *,
+    amount_col: str = AMOUNT_COL,
+    type_col: str = TYPE_COL,
+) -> dict:
+    """The insights dict from the values of :func:`insights_aggregates`
+    (``scalars``) and ``(type value, count)`` pairs; each optional key is
+    present only when its column is among ``columns``."""
+    insights: dict = {"total_loans": scalars["total"]}
+    if amount_col in columns:
+        insights["avg_loan_amount"] = scalars["avg_amount"]
+    if type_col in columns:
+        insights["by_loan_type"] = [{type_col: v, "count": n} for v, n in type_counts]
+    return insights
+
+
 def generate_insights(
     df: DataFrame,
     *,
-    amount_col: str = "loan_amount",
-    type_col: str = "loan_type",
+    amount_col: str = AMOUNT_COL,
+    type_col: str = TYPE_COL,
 ) -> dict:
     """Compute the insights dict for ``df`` in at most two jobs."""
-    aggs = [F.count(F.lit(1)).alias("total")]
-    has_amount = amount_col in df.columns
-    if has_amount:
-        aggs.append(F.avg(F.col(amount_col)).alias("avg_amount"))
-    row = df.agg(*aggs).collect()[0]
-
-    insights: dict = {"total_loans": row["total"]}
-    if has_amount:
-        insights["avg_loan_amount"] = row["avg_amount"]
+    aggs = insights_aggregates(df.columns, amount_col)
+    scalars = df.agg(*[c.alias(n) for n, c in aggs.items()]).collect()[0].asDict()
+    type_counts = []
     if type_col in df.columns:
-        insights["by_loan_type"] = [
-            r.asDict()
+        type_counts = [
+            tuple(r)
             for r in df.groupBy(type_col).agg(F.count(F.lit(1)).alias("count")).collect()
         ]
-    return insights
+    return assemble_insights(
+        df.columns, scalars, type_counts, amount_col=amount_col, type_col=type_col
+    )
 
 
 def write_insights_json(insights: dict, path: str) -> str:

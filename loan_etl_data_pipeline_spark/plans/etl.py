@@ -7,9 +7,12 @@ insights dict (→ optional JSON report file).
 Differences, all scale-motivated (SURVEY.md §4.3):
 - optional explicit schema kills the inference double-scan;
 - all column modes in one job, not one per column;
-- the cleaned frame is cached once and consumed by both the Parquet
-  write and the insights aggregation — the reference re-executes the
-  whole uncached lineage for every action (4+N scans of the CSV);
+- the insights cost no job of their own: the mode job also collects the
+  loan-type histogram (the fill's effect on it is applied on the
+  driver), and the row count and mean amount are an ``Observation`` on
+  the Parquet write — so the cleaned frame has one consumer, the write,
+  and is never cached, where the reference re-executes the whole
+  uncached lineage for every action (4+N scans of the CSV);
 - Parquet can be written straight to ``s3a://`` (no boto3 re-upload).
 """
 
@@ -18,17 +21,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark import StorageLevel
 
 from loan_etl_data_pipeline_spark.operators.cleaning import (
     TS_FORMATS,
+    column_modes_with_counts,
     fill_nulls_with_mode,
     split_timestamp,
 )
 from loan_etl_data_pipeline_spark.operators.profile import (
-    generate_insights,
+    TYPE_COL,
+    assemble_insights,
+    insights_aggregates,
     write_insights_json,
 )
+from loan_etl_data_pipeline_spark.operators.quality import observe_metrics
 from loan_etl_data_pipeline_spark.sources.csv import (
     read_csv,
     resolve_input_files,
@@ -39,6 +45,17 @@ from loan_etl_data_pipeline_spark.sources.csv import (
 def clean(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
     """The transformation core: mode-fill all columns, then split ``ts_col``."""
     return split_timestamp(fill_nulls_with_mode(df), ts_col)
+
+
+def _filled_counts(counts: list[tuple]) -> list[tuple]:
+    """Value counts in mode order, as they read after the mode fill: the
+    null count joins the mode, unless the mode itself is null (then the
+    fill is a no-op and the null group stays)."""
+    nulls = sum(n for v, n in counts if v is None)
+    if not nulls or counts[0][0] is None:
+        return counts
+    (mode, n), rest = counts[0], counts[1:]
+    return [(mode, n + nulls)] + [(v, c) for v, c in rest if v is not None]
 
 
 def _run(
@@ -66,18 +83,19 @@ def _run(
             )
         d = sniff_csv_dialect(local[0])
         dialect = {"sep": d["sep"], "quote": d["quote"], "header": d["header"]}
-    cleaned = clean(read_csv(spark, files, schema=schema, **dialect), ts_col)
+    raw = read_csv(spark, files, schema=schema, **dialect)
 
-    # One materialization, two consumers (write + insights). MEMORY_AND_DISK
-    # so a 100 TB run degrades to disk instead of OOM; on a real cluster
-    # you'd often skip the cache and let the parquet write feed insights
-    # by re-reading the written output — both paths avoid re-scanning CSV.
-    cleaned.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        write(cleaned.write)
-        insights = generate_insights(cleaned)
-    finally:
-        cleaned.unpersist()
+    # clean() with its mode job swapped for one that also returns the
+    # type histogram; the write's Observation carries the scalar
+    # aggregates. Two actions, no cache, and the insights equal
+    # generate_insights(cleaned) without re-running the cleaned lineage.
+    modes, type_counts = column_modes_with_counts(raw, TYPE_COL)
+    cleaned = split_timestamp(fill_nulls_with_mode(raw, modes=modes), ts_col)
+    observed, obs = observe_metrics(
+        cleaned, "etl_insights", insights_aggregates(cleaned.columns)
+    )
+    write(observed.write)
+    insights = assemble_insights(cleaned.columns, obs.get, _filled_counts(type_counts))
 
     if insights_path:
         write_insights_json(insights, insights_path)

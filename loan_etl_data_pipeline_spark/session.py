@@ -111,14 +111,16 @@ def create_session(
     # (master=None → spark-submit / cluster manager config) gets stock
     # defaults unless it opts in via extra_conf.
     if master and master.startswith("local"):
-        # The JVM sizes its JIT pool from cgroup-visible CPUs and can
-        # come up with a SINGLE C2 thread; whole-stage-codegen classes
-        # then queue for tens of seconds and run interpreted meanwhile
-        # (measured 20-30× slowdowns on wide aggregate plans). Give the
-        # JIT a real pool.
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", "-XX:CICompilerCount=12"
-        )
+        # No JIT flag: HotSpot sizes its compiler pool from the CPUs the
+        # JVM sees, 3 threads on a 4-vCPU host and 15 on 32 CPUs. A
+        # fixed pool of 12 was slower on a 4-vCPU VM, where compiler
+        # threads compete with task threads for the same cores: a cold
+        # q_pagerank in a fresh JVM took 12.4-13.1 s with 12 threads,
+        # 8.9-9.6 s with 4 and 7.3-8.3 s with 3. An older note here
+        # reported a single C2 thread under a CPU-limited cgroup; that
+        # host could not be re-checked, so such a deployment should size
+        # the pool itself through spark.driver.extraJavaOptions.
+
         # Shuffle/spill files on tmpfs when available: local mode on a
         # virtual disk sees multi-second uninterruptible-IO stalls; a
         # real cluster overrides local dirs via its manager config.

@@ -72,10 +72,17 @@ def stream_etl(
     raw = reader.csv(input_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        cleaned = clean(batch_df, ts_col)
-        cleaned.write.mode("append").parquet(output_dir)
-        if on_batch is not None:
-            on_batch(cleaned, batch_id)
+        # the mode job and the write both read the batch: cache it so its
+        # files are decompressed and parsed once (and counted once in the
+        # query's numInputRows)
+        batch_df.persist()
+        try:
+            cleaned = clean(batch_df, ts_col)
+            cleaned.write.mode("append").parquet(output_dir)
+            if on_batch is not None:
+                on_batch(cleaned, batch_id)
+        finally:
+            batch_df.unpersist()
 
     writer = raw.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir

@@ -304,3 +304,105 @@ def test_read_parquet_evolving(spark, tmp_path):
     ]
     got = {r["k"]: r for r in out.collect()}
     assert got[1]["note"] is None and got[2]["score"] == 9.5
+
+
+# ---- insights from the plan's own jobs ----------------------------------
+
+_INSIGHT_CASES = {
+    # nulls in both amount and type; type mode 'personal' absorbs the null
+    "mixed_nulls": (
+        "loan_id,timestamp,loan_amount,loan_type\n"
+        "1,2024-01-15 10:30:00,100.0,auto\n"
+        "2,01/16/2024 11:00:00,,personal\n"
+        "3,17-01-2024 12:15:30,100.0,personal\n"
+        "4,not-a-date,200.0,\n",
+        {"personal": 3, "auto": 1},
+    ),
+    # null is the type's mode: the fill is a no-op, the None group stays
+    "null_majority_type": (
+        "loan_id,timestamp,loan_amount,loan_type\n"
+        "1,2024-01-15 10:30:00,100.0,\n"
+        "2,bad,,\n"
+        "3,,5.0,auto\n",
+        {None: 2, "auto": 1},
+    ),
+    # inferred integer type column: values come back as ints
+    "int_type": (
+        "loan_id,timestamp,loan_amount,loan_type\n"
+        "1,2024-01-15 10:30:00,100.0,3\n"
+        "2,bad,,3\n"
+        "3,,5.0,7\n"
+        "4,,5.0,\n",
+        {3: 3, 7: 1},
+    ),
+    # header only: an empty plan must still report its Observation
+    "header_only": ("loan_id,timestamp,loan_amount,loan_type\n", {}),
+}
+
+
+def _with_profile_jobs(spark, fn):
+    """``fn()`` and the call sites of the jobs it fired from
+    operators/profile.py, read from the status store once the listener
+    bus has delivered every event."""
+    from loan_etl_data_pipeline_spark.operators import profile
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs():
+        sc.listenerBus().waitUntilEmpty()
+        js = sc.statusStore().jobsList(None)
+        return [(j.jobId(), j.name()) for j in map(js.apply, range(js.size()))]
+
+    last = max((i for i, _ in jobs()), default=-1)
+    out = fn()
+    site = os.path.basename(profile.__file__)
+    return out, [n for i, n in jobs() if i > last and site in n]
+
+
+def _in_thread(fn, timeout_s):
+    """``fn()`` with a timeout: an Observation that is never reported
+    would block ``run_etl`` forever instead of failing."""
+    import threading
+
+    out = {}
+    t = threading.Thread(target=lambda: out.setdefault("v", fn()), daemon=True)
+    t.start()
+    t.join(timeout_s)
+    assert not t.is_alive(), f"still running after {timeout_s} s"
+    assert "v" in out, "raised (see the thread's traceback above)"
+    return out["v"]
+
+
+@pytest.mark.parametrize("case", sorted(_INSIGHT_CASES))
+def test_run_etl_insights_equal_generate_insights(spark, tmp_path, case):
+    """run_etl takes its insights from the mode job and an Observation on
+    the write — no job from operators.profile, nothing left cached — and
+    they equal generate_insights over the cleaned frame."""
+    from loan_etl_data_pipeline_spark.operators.profile import generate_insights
+    from loan_etl_data_pipeline_spark.plans.etl import clean
+
+    text, by_type = _INSIGHT_CASES[case]
+    p = tmp_path / f"{case}.csv"
+    p.write_text(text)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+
+    got, fired = _with_profile_jobs(spark, lambda: _in_thread(
+        lambda: run_etl(spark, str(p), str(tmp_path / "out")), 120
+    ))
+    assert not fired
+    assert cm.isEmpty(), "run_etl left a cached frame"
+
+    want, fired = _with_profile_jobs(
+        spark, lambda: generate_insights(clean(read_csv(spark, str(p))))
+    )
+    assert fired  # positive control: the detector sees profile's own jobs
+
+    def canon(ins):
+        key = lambda d: (d["loan_type"] is None, str(d["loan_type"]))
+        return {**ins, "by_loan_type": sorted(ins["by_loan_type"], key=key)}
+
+    assert canon(got) == canon(want)
+    # dict equality also pins the value type: {"3": 3} != {3: 3}
+    assert {d["loan_type"]: d["count"] for d in got["by_loan_type"]} == by_type
+    assert got["total_loans"] == sum(by_type.values())

@@ -951,3 +951,22 @@ def test_stream_reconcile_rebuild_parity_and_replay(spark, tmp_path):
         int(p.rsplit("=", 1)[1]) for p in _glob.glob(f"{pend}/batch=*")
     )
     assert spark.read.parquet(f"{pend}/batch={last2}").count() == len(ref_open)
+
+
+def test_stream_etl_counts_each_landed_row_once(spark, tmp_path):
+    """Each micro-batch is read once although the mode job and the write
+    both consume it: the query's numInputRows equals the landed rows, in
+    the first run and after a restart on the same checkpoint."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    args = (spark, str(in_dir), str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+
+    for name, text, landed in (("a.csv", CSV_A, 3), ("b.csv", CSV_B, 2)):
+        (in_dir / name).write_text(text)
+        q = stream_etl(*args, schema=LOAN_SCHEMA, available_now=True)
+        q.awaitTermination(120)
+        assert not q.isActive
+        assert sum(p["numInputRows"] for p in q.recentProgress) == landed
+        assert cm.isEmpty(), "a micro-batch stayed cached"
